@@ -35,6 +35,19 @@ class QueryAPI:
         self.spark = spark
         self.sf_dir = sf_dir
 
+    _INT_PARAMS = ("start_ms", "end_ms", "step_ms", "limit")
+
+    @classmethod
+    def _int_params(cls, params: dict) -> dict:
+        """``params`` with the engine-native routes' integer parameters
+        coerced to int. The HTTP adapter passes URL query-string values
+        through as strings and JSON body values as numbers; both must
+        reach the compilers as the same request."""
+        return {
+            k: int(v) if k in cls._INT_PARAMS and v is not None else v
+            for k, v in params.items()
+        }
+
     # -- infra ------------------------------------------------------------
 
     def ping(self, params: dict | None = None) -> dict:
@@ -84,6 +97,7 @@ class QueryAPI:
 
     def metrics_query(self, params: dict) -> dict:
         """PromQL instant/range query (§3.1 lifecycle)."""
+        params = self._int_params(params)
         q = params["query"]
         start = params.get("start_ms")
         end = params.get("end_ms")
@@ -497,26 +511,27 @@ class QueryAPI:
         request window via the step ladder (the same rule
         :meth:`metrics_query` applies), falling back to 60s only when
         there is no window to derive from. One definition so the two
-        paths can never answer the same request at different steps."""
+        paths can never answer the same request at different steps.
+        Takes params already passed through :meth:`_int_params`."""
         step = params.get("step_ms")
         if step is not None:
-            return int(step)
+            return step
         start, end = params.get("start_ms"), params.get("end_ms")
         if start is not None and end is not None:
-            return step_for_duration(int(end) - int(start))
+            return step_for_duration(end - start)
         return 60_000
 
     def logs_query(self, params: dict) -> dict:
         """LogQL query: aggregate -> matrix, selector-only -> exemplars."""
+        params = self._int_params(params)
         q = params["query"]
         node = parse_logql(q)
         src = default_log_source(self.spark, self.sf_dir)
         from lakerunner_spark.logql.parser import LogLeaf
 
         if isinstance(node, LogLeaf):
-            limit = int(params.get("limit", 100))
             df = compile_logql_exemplar(
-                node, src, limit=limit,
+                node, src, limit=params.get("limit", 100),
                 descending=params.get("order", "desc") == "desc",
                 tiebreak=params.get("tiebreak"),
                 start_ms=params.get("start_ms"),
@@ -549,12 +564,12 @@ class QueryAPI:
         a single chunk."""
         try:
             q = params["query"]  # KeyError -> the adapter's 400 path
+            params = self._int_params(params)
             start = params.get("start_ms")
             end = params.get("end_ms")
             if start is None or end is None:
                 yield self.logs_query(params)
                 return
-            start, end = int(start), int(end)
             n_slices = int(params.get("n_slices", 4))
             max_parallel = int(params.get("max_parallel", 3))
             node = parse_logql(q)
@@ -569,7 +584,7 @@ class QueryAPI:
                 emitted = False
                 for rows in logql_ordered_exemplars(
                     node, src, start, end,
-                    limit=int(params.get("limit", 100)),
+                    limit=params.get("limit", 100),
                     n_slices=n_slices,
                     max_parallel=min(max_parallel, 2),
                     tiebreak=params.get("tiebreak"),

@@ -438,34 +438,46 @@ def extract_features(
 
 
 def byte_histogram_features(media: DataFrame, buckets: int = 16) -> DataFrame:
-    """Codec-free feature extraction that runs ANYWHERE: normalized byte
-    histogram of the payload — pure Spark expressions over hex pairs
-    (binary-safe, stays in codegen), no Python in the loop."""
-    n = F.length("payload")  # byte count for binary columns
+    """Codec-free feature extraction that runs ANYWHERE: the normalized
+    byte histogram of ``payload``, as pure Spark expressions (no Python).
+
+    Every input column but ``payload`` passes through; ``n_bytes`` and
+    ``features`` (``buckets`` doubles summing to 1) are added. An empty
+    payload gives ``n_bytes = 0`` and NULL features; a NULL payload gives
+    NULL for both, as :func:`extract_features` does.
+
+    Cost is linear in payload size. Each payload is decoded once, in its
+    own projection, to an array of bucket ids: byte ``i`` is read with a
+    binary ``substring`` (byte-indexed, O(1)) and parsed from its two hex
+    digits, the :func:`~lakerunner_spark.functions.hashing.fnv64a` idiom.
+    That ``transform`` is a higher-order function, which Spark interprets
+    (``CodegenFallback``): one interpreted lambda call per byte. Each
+    bucket is then counted by ``array_remove``, which is compiled.
+    """
     width = 256 // buckets
-    # binary -> array<int> of byte values via hex-pair parsing
-    bytes_arr = F.expr(
-        "transform(sequence(1, length(payload)),"
-        " i -> cast(conv(substr(hex(payload), 2*i - 1, 2), 16, 10) as int))"
+    n = F.length("payload").cast("long")  # byte count for binary columns
+    bucket_ids = F.transform(
+        F.sequence(F.lit(1), F.length("payload")),
+        lambda i: (
+            F.conv(F.hex(F.substring("payload", i, F.lit(1))), 16, 10).cast("int")
+            / width
+        ).cast("int"),
     )
+    # sequence(1, 0) is [1, 0], so an empty payload is never decoded.
+    # Catalyst does not inline a non-trivial expression into several
+    # references (CollapseProject), so the decode runs once per row.
+    decoded = media.withColumns(
+        {"n_bytes": n, "_bucket_ids": F.when(n > 0, bucket_ids)}
+    ).drop("payload")
+    n_bytes = F.col("n_bytes")
     hist = F.array(
         *[
-            (
-                F.size(
-                    F.filter(
-                        bytes_arr, lambda b: (b / width).cast("int") == F.lit(i)
-                    )
-                )
-                / n
-            ).cast("double")
+            ((n_bytes - F.size(F.array_remove("_bucket_ids", i))) / n_bytes)
             for i in range(buckets)
         ]
     )
-    return media.select(
-        "media_id",
-        "media_type",
-        n.cast("long").alias("n_bytes"),
-        hist.alias("features"),
+    return decoded.withColumn("features", F.when(n_bytes > 0, hist)).drop(
+        "_bucket_ids"
     )
 
 

@@ -50,19 +50,9 @@ def mm1_byte_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     features, aggregated per lang. Payload synthesized from the ASCII
     text column so the oracle can reproduce byte values exactly."""
     d = load_table(spark, sf_dir, "documents")
-    media = d.select(
-        F.col("doc_id").alias("media_id"),
-        F.lit("image").alias("media_type"),
-        F.encode("text", "utf-8").alias("payload"),
-        "lang",
-    )
-    feats = byte_histogram_features(
-        media.select("media_id", "media_type", "payload"), buckets=4
-    )
-    joined = feats.join(
-        media.select(F.col("media_id"), "lang"), "media_id"
-    )
-    return joined.groupBy("lang").agg(
+    media = d.select(F.encode("text", "utf-8").alias("payload"), "lang")
+    feats = byte_histogram_features(media, buckets=4)
+    return feats.groupBy("lang").agg(
         F.sum("n_bytes").alias("total_bytes"),
         *[
             _pr(F.avg(F.element_at("features", i + 1)), 6).alias(f"avg_h{i}")

@@ -559,6 +559,61 @@ def test_logs_stream_selector_zero_matches_yields_empty_chunk(api):
         srv.shutdown()
 
 
+def test_http_adapter_logs_query_get_matches_json_post(api):
+    """Integer parameters in a URL query string arrive as strings; the
+    engine-native routes coerce them, so a GET answers exactly what the
+    same request as a JSON POST body answers."""
+    import http.client
+    from urllib.parse import urlencode
+
+    start_ms, end_ms = (int(v * 1000) for v in _events_window_s(api))
+    requests = [
+        ("/api/v1/logs/query", {
+            "query": 'sum by (event_type) (count_over_time({event_type=~".+"}[10m]))',
+            "start_ms": start_ms, "end_ms": end_ms, "step_ms": 600_000,
+        }),
+        ("/api/v1/logs/query", {
+            "query": 'count_over_time({event_type="error"}[10m])',
+            "start_ms": start_ms, "end_ms": end_ms,
+        }),
+        ("/api/v1/logs/query", {
+            "query": '{event_type="error"}',
+            "start_ms": start_ms, "end_ms": end_ms, "limit": 5,
+        }),
+        ("/api/v1/metrics/query", {
+            "query": "sum by (event_type) (events)",
+            "start_ms": start_ms, "end_ms": end_ms,
+        }),
+    ]
+
+    def canonical(body: bytes):
+        out = json.loads(body)
+        for key in ("result", "streams"):  # row order is not part of the reply
+            if key in out:
+                out[key] = sorted(out[key], key=json.dumps)
+        return out
+
+    srv = serve(api, port=0)
+    try:
+        port = srv.server_address[1]
+        threading.Thread(target=srv.serve_forever, daemon=True).start()
+        conn = http.client.HTTPConnection("127.0.0.1", port, timeout=120)
+        for path, params in requests:
+            conn.request("GET", f"{path}?{urlencode(params)}")
+            get = conn.getresponse()
+            get_body = get.read()
+            conn.request("POST", path, json.dumps(params),
+                         {"Content-Type": "application/json"})
+            post = conn.getresponse()
+            post_body = post.read()
+            assert (get.status, post.status) == (200, 200), (path, get_body)
+            assert canonical(get_body) == canonical(post_body), params
+            assert any(canonical(get_body).get(k) for k in ("result", "streams"))
+        conn.close()
+    finally:
+        srv.shutdown()
+
+
 def test_http_adapter_empty_generator_is_200_zero_events(api, monkeypatch):
     """Belt-and-braces for the same ADVICE item: even a handler that
     yields NOTHING (an empty generator) gets a 200 SSE response with

@@ -3,7 +3,9 @@
 from __future__ import annotations
 
 import random
+import time
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -50,6 +52,92 @@ def test_byte_histogram_pure_spark(media):
     assert out[1].features[0] == 1.0 and sum(out[1].features) == 1.0
     # payload all-255 -> all in bucket 3
     assert out[2].features[3] == 1.0
+
+
+@pytest.mark.parametrize("buckets", [4, 16])
+def test_byte_histogram_binary_safe(spark, buckets):
+    """High bytes (0x80-0xFF) and NUL land in their buckets exactly as a
+    numpy bincount puts them."""
+    rng = np.random.default_rng(7)
+    payloads = {
+        1: bytes(range(256)),
+        2: b"\x00" * 5 + bytes(range(0x80, 0x100)),
+        3: bytes(rng.integers(0x80, 0x100, 300, dtype=np.uint8)),
+        4: b"\x00\xff\x80\x7f\x00",
+    }
+    media = spark.createDataFrame(
+        list(payloads.items()), "media_id long, payload binary"
+    )
+    out = {
+        r.media_id: r
+        for r in byte_histogram_features(media, buckets=buckets).collect()
+    }
+    width = 256 // buckets
+    for media_id, p in payloads.items():
+        counts = np.bincount(
+            np.frombuffer(p, dtype=np.uint8) // width, minlength=buckets
+        )
+        assert out[media_id].n_bytes == len(p)
+        assert out[media_id].features == (counts / len(p)).tolist(), media_id
+
+
+def test_byte_histogram_empty_and_null_payloads(spark):
+    """An empty payload yields n_bytes 0 and NULL features, a NULL one
+    NULL for both (as extract_features); neither fails the job, and the
+    other columns pass through."""
+    media = spark.createDataFrame(
+        [(1, "a", b""), (2, "b", None), (3, "c", b"\x10")],
+        "media_id long, tag string, payload binary",
+    )
+    out = byte_histogram_features(media, buckets=4)
+    assert out.columns == ["media_id", "tag", "n_bytes", "features"]
+    rows = {r.media_id: r for r in out.collect()}
+    assert (rows[1].n_bytes, rows[1].features) == (0, None)
+    assert (rows[2].n_bytes, rows[2].features) == (None, None)
+    assert rows[3].features == [1.0, 0.0, 0.0, 0.0] and rows[3].tag == "c"
+
+
+def test_byte_histogram_decodes_each_payload_once(media):
+    """The optimized plan evaluates the byte decode once per row: one
+    binary-substring read, never a re-hex of the whole payload."""
+    plan = (
+        byte_histogram_features(media, buckets=16)
+        ._jdf.queryExecution()
+        .optimizedPlan()
+        .toString()
+    )
+    assert plan.count("hex(substring(payload") == 1, plan
+    assert "hex(payload" not in plan, plan
+
+
+def test_byte_histogram_linear_in_payload_size(spark):
+    """Time grows linearly with payload bytes: t(4k)/t(1k) is at most 4
+    for a linear kernel and about 10-16 for a quadratic one. 256 payloads
+    per size keep the per-byte work well above the fixed cost of a job,
+    which would otherwise flatten the ratio of any kernel."""
+    rng = np.random.default_rng(11)
+
+    def best_of_3(n_bytes: int) -> float:
+        media = spark.createDataFrame(
+            [
+                (i, bytes(rng.integers(0, 256, n_bytes, dtype=np.uint8)))
+                for i in range(256)
+            ],
+            "media_id long, payload binary",
+        ).cache()
+        media.count()
+        feats = byte_histogram_features(media, buckets=16)
+        times = []
+        for _ in range(3):
+            t0 = time.perf_counter()
+            feats.write.format("noop").mode("overwrite").save()
+            times.append(time.perf_counter() - t0)
+        media.unpersist()
+        return min(times)
+
+    best_of_3(1024)  # warm the JIT before anything is timed
+    t1k, t2k, t4k = (best_of_3(n) for n in (1024, 2048, 4096))
+    assert t4k / t1k < 8, (t1k, t2k, t4k)
 
 
 def test_frame_sample_bounded(media):
